@@ -1683,9 +1683,7 @@ def q_crosswalk_relational(spark, sf_dir):
         "lon + 0.5 AS lon_max",
         "lat + 0.5 AS lat_max",
     )
-    return crosswalk_relational(
-        tiles, rings, level=10, cover_level=8, bucket_level=6
-    ).orderBy("image_id", "cell_id", "polygon_id", "ring_index")
+    return crosswalk_relational(tiles, rings, level=10, cover_level=8).orderBy("image_id", "cell_id", "polygon_id", "ring_index")
 
 
 def q_knn_arrow(spark, sf_dir):

@@ -20,6 +20,9 @@ primitives the reference engine relies on:
 * ``signed_area`` — planar shoelace area (used by the tiling layer; the
   reference's geodesic area call at src/index.ts:676 is dead code, see
   SURVEY.md §7.4 Q2, so no geodesic implementation is needed for parity).
+* ``ring_mats`` — the one reader of ``list<list<double>>`` Arrow ring
+  columns: a whole column becomes one float64 vertex matrix plus
+  per-row offsets, with no per-vertex Python objects.
 
 All kernels are vectorized over numpy arrays; the only Python-level loops
 are over *intersections/vertices of a single polygon* inside the
@@ -29,6 +32,7 @@ decomposition walk (decompose.py), never over dataset rows.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow.compute as pc
 
 __all__ = [
     "pmod",
@@ -37,6 +41,7 @@ __all__ = [
     "signed_area",
     "segment_intersections",
     "point_in_ring",
+    "ring_mats",
     "js_number_string",
 ]
 
@@ -255,6 +260,28 @@ def point_in_ring_batch(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.
     inside = (np.sum(crossing, axis=1) % 2).astype(bool)
     inside[np.any(on_b, axis=1)] = False
     return inside
+
+
+def ring_mats(col):
+    """One float64 (Σn_i, 2) vertex matrix + per-row offsets from a
+    ``list<list<double>>`` Arrow column: row i's ring is
+    ``pts[starts[i]:starts[i + 1]]``.  The list buffers are re-sliced
+    (flatten honors offsets), never round-tripped through Python
+    objects.  A NULL ring, vertex or coordinate and a vertex that is not
+    2-D raise ``ValueError``: flatten silently drops NULLs and would
+    misalign every later row."""
+    verts = col.flatten()
+    xy = verts.flatten()
+    if col.null_count or verts.null_count or xy.null_count:
+        raise ValueError("ring_mats: NULL ring, vertex or coordinate")
+    if np.any(np.asarray(pc.list_value_length(verts)) != 2):
+        raise ValueError("ring_mats: a vertex is not 2-D")
+    nlens = np.asarray(pc.list_value_length(col), dtype=np.int64)
+    xy = xy.to_numpy(zero_copy_only=False)
+    pts = xy.astype(np.float64, copy=False).reshape(-1, 2)
+    starts = np.zeros(len(nlens) + 1, dtype=np.int64)
+    np.cumsum(nlens, out=starts[1:])
+    return pts, starts
 
 
 def js_number_string(v: float) -> str:

@@ -9,6 +9,10 @@ repeat/arange arithmetic, overlap via one CSR gather + unique — no
 Python loop over tiles or cells.  Output links every tile to its cells
 and the rings whose cover those cells overlap; cells overlapping no
 ring emit one NULL-ring row so the raster side stays complete.
+
+Also home of what the three relational spatial joins (crosswalk,
+PIP, overlap) share: ``covers_df`` and ``interval_join``, their one
+candidate-generation primitive.
 """
 
 from __future__ import annotations
@@ -17,8 +21,10 @@ import numpy as np
 import pyarrow as pa
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
-from ..cells import cell_range_at_max, spread_bits
+from ..cells import MAX_LEVEL, cell_range_at_max, cover_ring, spread_bits
+from ..geom import ring_mats
 
 
 def _bbox_cells(lon0, lat0, lon1, lat1, level: int):
@@ -137,66 +143,90 @@ def crosswalk(
 
 
 # ---------------------------------------------------------------------------
-# Relational fallback: cell-bucket equi-join (no broadcast index)
+# Relational spatial joins: one interval join on Morton buckets
 # ---------------------------------------------------------------------------
 
+# bucket level of the relational PIP and crosswalk joins (overlap_join
+# derives its own from the cover spans)
+BUCKET_LEVEL = 6
 
-def bucketed_cover_spans(
-    covers: DataFrame, bucket_level: int, max_level: int
-) -> DataFrame:
-    """covers(lo, hi, …) → one row per coarse bucket the interval spans
-    (bucket = level-``bucket_level`` Morton prefix).  The shared
-    dim-side shape of BOTH relational spatial joins
-    (``crosswalk_relational`` here and ``tiling.pip_join_relational``):
-    the fact side maps each cell to exactly ONE bucket, an interval
-    expands to its contiguous bucket range — every qualifying pair
-    meets in exactly one bucket, so the classic grid-join duplication
-    cannot occur."""
-    from pyspark.sql import functions as F
 
-    shift_b = 2 * (max_level - bucket_level)
-    return covers.withColumn(
-        "bucket",
+def bucket_melt(df: DataFrame, side: str, bucket_level: int) -> DataFrame:
+    """One row per level-``bucket_level`` Morton bucket that the
+    max-level range [``{side}_lo``, ``{side}_hi``] spans, in column
+    ``{side}_bucket``."""
+    shift = 2 * (MAX_LEVEL - bucket_level)
+    return df.withColumn(
+        f"{side}_bucket",
         F.explode(
             F.sequence(
-                F.shiftright(F.col("lo"), shift_b),
-                F.shiftright(F.col("hi"), shift_b),
+                F.shiftright(f"{side}_lo", shift), F.shiftright(f"{side}_hi", shift)
             )
         ),
     )
 
 
-def covers_df(rings_out: DataFrame, cover_level: int = 8, max_level: int = 16) -> DataFrame:
-    """(polygon_id, ring_index, lo, hi, full) — the ring cover as a
-    DataFrame, computed on the executors and NEVER collected.  The
-    relational crosswalk path consumes this when the ring layer is too
-    large to broadcast as an IntervalIndex."""
-    import pandas as pd
+def interval_join(
+    a: DataFrame, b: DataFrame, bucket_level: int, how: str = "inner"
+) -> DataFrame:
+    """Every pair of overlapping max-level Morton ranges, ``a``'s
+    [a_lo, a_hi] against ``b``'s [b_lo, b_hi] — the candidate step of
+    every relational spatial join here (a ring cover is a set of ranges,
+    a point is [cell, cell], a level-L tile cell is
+    [cell << 2(MAX_LEVEL-L), ((cell+1) << 2(MAX_LEVEL-L)) - 1]).
 
-    from ..cells import cover_ring
+    Both sides melt onto the buckets their range spans and equi-join on
+    the bucket with the range overlap as residual.  An overlapping pair
+    meets in every bucket both ranges span, so it is kept only in the
+    bucket of ``greatest(a_lo, b_lo)`` — replicate, then report once
+    (EDBT'15 overlapping interval join): each pair comes out exactly
+    once, at any bucket level.  The output has every column of both
+    sides.  ``how="left"`` keeps ``a``'s unmatched rows (NULL ``b``
+    columns) correct only when each ``a`` range lies in one bucket."""
+    shift = 2 * (MAX_LEVEL - bucket_level)
+    ma = bucket_melt(a, "a", bucket_level)
+    mb = bucket_melt(b, "b", bucket_level)
+    a_lo, a_hi, b_lo, b_hi = (F.col(c) for c in ("a_lo", "a_hi", "b_lo", "b_hi"))
+    on = (
+        (F.col("a_bucket") == F.col("b_bucket"))
+        & (a_lo <= b_hi)
+        & (b_lo <= a_hi)
+        & (F.shiftright(F.greatest(a_lo, b_lo), shift) == F.col("a_bucket"))
+    )
+    return ma.join(mb, on, how).drop("a_bucket", "b_bucket")
+
+
+def covers_df(rings_out: DataFrame, cover_level: int = 8) -> DataFrame:
+    """(polygon_id, ring_index, lo, hi, full) — the ring cover as a
+    DataFrame, computed on the executors and NEVER collected: one
+    ``cells.cover_ring`` call per ring, the ring read straight from the
+    Arrow coords buffers (``geom.ring_mats``)."""
 
     def run(batches):
-        for pdf in batches:
-            out = {"polygon_id": [], "ring_index": [], "lo": [], "hi": [], "full": []}
-            for pid, ridx, coords in zip(
-                pdf["polygon_id"], pdf["ring_index"], pdf["coords"]
-            ):
-                arr = np.asarray([list(c) for c in coords], dtype=np.float64)
-                for lo, hi, fl in cover_ring(arr, max_level=cover_level, abs_max=max_level):
-                    out["polygon_id"].append(pid)
-                    out["ring_index"].append(int(ridx))
-                    out["lo"].append(int(lo))
-                    out["hi"].append(int(hi))
-                    out["full"].append(int(fl))
-            if not out["polygon_id"]:
+        for batch in batches:
+            pts, starts = ring_mats(batch.column("coords"))
+            covs = [
+                cover_ring(pts[starts[i] : starts[i + 1]], max_level=cover_level)
+                for i in range(batch.num_rows)
+            ]
+            n = [len(c) for c in covs]
+            if not sum(n):
                 continue
-            pdf_out = pd.DataFrame(out)
-            pdf_out["ring_index"] = pdf_out["ring_index"].astype("int32")
-            pdf_out["full"] = pdf_out["full"].astype("int32")
-            yield pdf_out
+            iv = np.concatenate(covs)
+            row = pa.array(np.repeat(np.arange(batch.num_rows), n))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column("polygon_id").take(row),
+                    batch.column("ring_index").take(row).cast(pa.int32()),
+                    pa.array(iv[:, 0]),
+                    pa.array(iv[:, 1]),
+                    pa.array(iv[:, 2].astype(np.int32)),
+                ],
+                names=["polygon_id", "ring_index", "lo", "hi", "full"],
+            )
 
     schema = "polygon_id string, ring_index int, lo long, hi long, full int"
-    return rings_out.select("polygon_id", "ring_index", "coords").mapInPandas(run, schema)
+    return rings_out.select("polygon_id", "ring_index", "coords").mapInArrow(run, schema)
 
 
 def tile_cells_df(
@@ -228,8 +258,6 @@ def tile_cells_df(
         still pure JVM), with the cell cap applied to the SUMMED width.
     A latitude inversion (lat_min > lat_max) has no wrap interpretation
     and always fails loudly."""
-    from pyspark.sql import functions as F
-
     from ..functions.cells_sql import _spread_sql
 
     if antimeridian not in ("error", "split"):
@@ -289,42 +317,26 @@ def crosswalk_relational(
     rings_out: DataFrame,
     level: int = 12,
     cover_level: int = 8,
-    bucket_level: int = 6,
-    max_level: int = 16,
     id_col: str = "image_id",
 ) -> DataFrame:
-    """Crosswalk WITHOUT a broadcast index: a cell-bucket equi-join
-    (PAPERS.md EDBT'15 grid-partitioned spatial join pattern), for when
-    the ring layer outgrows executor memory.
-
-    Both sides key on a coarse bucket (the level-``bucket_level``
-    ancestor cell): a tile cell maps to exactly ONE bucket (its Morton
-    prefix), a ring cover interval expands to the contiguous bucket
-    range it spans — so every qualifying (cell, interval) pair meets in
-    exactly one bucket and the classic grid-join duplicate problem
-    cannot occur (dedup is only needed across a ring's own intervals).
-    The shuffle moves (id, cell) pairs and (bucket, interval) rows —
-    never geometry.  Catalyst plans it as a plain shuffled hash/sort
-    equi-join on ``bucket`` with the interval overlap as a residual
-    filter, which AQE can skew-split; total work is O(cells + interval
-    bucket spans), no cartesian anywhere."""
-    from pyspark.sql import functions as F
-
-    shift_cell = 2 * (max_level - level)
-
-    cells = tile_cells_df(images, level, id_col).withColumn(
-        "bucket", F.shiftright(F.col("cell_id"), 2 * (level - bucket_level))
+    """Crosswalk WITHOUT a broadcast index, for when the ring layer
+    outgrows executor memory: each level-``level`` tile cell enters
+    ``interval_join`` as its max-level range against the ring cover
+    ranges, as a left join so a cell overlapping no ring keeps its
+    NULL-ring row.  The bucket level is ``min(BUCKET_LEVEL, level)``,
+    which keeps each cell in one bucket — the condition the left join's
+    NULL rows need.  ``distinct`` folds a ring's several intervals
+    meeting one cell.  The shuffle moves (id, cell) pairs and
+    (bucket, interval) rows — never geometry; no cartesian anywhere."""
+    shift = 2 * (MAX_LEVEL - level)
+    cells = tile_cells_df(images, level, id_col).select(
+        id_col,
+        "cell_id",
+        F.shiftleft("cell_id", shift).alias("a_lo"),
+        (F.shiftleft(F.col("cell_id") + 1, shift) - 1).alias("a_hi"),
     )
-    iv = bucketed_cover_spans(
-        covers_df(rings_out, cover_level, max_level), bucket_level, max_level
-    ).select("bucket", "lo", "hi", "polygon_id", "ring_index")
-    cell_lo = F.shiftleft(F.col("cell_id"), shift_cell)
-    cell_hi = F.shiftleft(F.col("cell_id") + 1, shift_cell) - 1
-    joined = cells.join(
-        iv,
-        (cells.bucket == iv.bucket) & (cell_lo <= iv.hi) & (cell_hi >= iv.lo),
-        "left",
+    cov = covers_df(rings_out, cover_level).select(
+        F.col("lo").alias("b_lo"), F.col("hi").alias("b_hi"), "polygon_id", "ring_index"
     )
-    return joined.select(
-        id_col, "cell_id", "polygon_id", "ring_index"
-    ).distinct()
+    joined = interval_join(cells, cov, min(BUCKET_LEVEL, level), how="left")
+    return joined.select(id_col, "cell_id", "polygon_id", "ring_index").distinct()

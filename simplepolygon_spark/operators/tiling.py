@@ -17,6 +17,9 @@ from PAPERS.md):
    vectorized), accepts FULL-cell hits outright, and refines only
    PARTIAL-cell candidates with the exact ray-cast PIP kernel.
 
+3. ``pip_join_relational`` — the no-broadcast fallback: points enter
+   ``crosswalk.interval_join`` as [cell, cell] ranges against the covers.
+
 At 1000 executors this plan reads the image table once, moves no image
 bytes across the network, and does O(log m) work per image — the only
 driver-side step is building/broadcasting the index from the (small)
@@ -29,6 +32,7 @@ from dataclasses import dataclass, field
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -127,9 +131,7 @@ class IntervalIndex:
 
 
 def build_interval_index(
-    rings_out: DataFrame | list,
-    cover_level: int = 11,
-    max_level: int = MAX_LEVEL,
+    rings_out: DataFrame | list, cover_level: int = 11
 ) -> IntervalIndex:
     """Build the broadcastable index from a rings_out DataFrame (or an
     already-collected list of Rows/dicts with polygon_id, ring_index,
@@ -152,7 +154,7 @@ def build_interval_index(
         try:
             # compute covers on the executors (one Arrow pass over the
             # ring layer) — the driver only collects compressed intervals
-            cover_rows = _covers_distributed(rings_out, cover_level, max_level)
+            cover_rows = _covers_distributed(rings_out, cover_level)
             rows = rings_out.select("polygon_id", "ring_index", "coords").collect()
         finally:
             if not caller_cached:
@@ -166,13 +168,13 @@ def build_interval_index(
     for row in rows:
         pid = row["polygon_id"]
         ridx = int(row["ring_index"])
-        coords = np.asarray([list(c) for c in row["coords"]], dtype=np.float64)
+        coords = np.asarray(row["coords"], dtype=np.float64)
         rid_of[(pid, ridx)] = len(rings)
         ring_keys.append((pid, ridx))
         rings.append(coords)
     if cover_rows is None:
         for (pid, ridx), coords in zip(ring_keys, rings):
-            cov = cover_ring(coords, max_level=cover_level, abs_max=max_level)
+            cov = cover_ring(coords, max_level=cover_level)
             rid = rid_of[(pid, ridx)]
             for lo, hi, fl in cov:
                 ivs.append((int(lo), int(hi), rid, int(fl)))
@@ -194,7 +196,6 @@ def build_interval_index(
             np.zeros(0, np.int64),
             np.zeros(0, np.int64),
             np.zeros(0, bool),
-            max_level,
             centroids=centroids,
         )
 
@@ -227,7 +228,6 @@ def build_interval_index(
         ids_sorted,
         iv[:, 2].copy(),
         iv[:, 3].astype(bool),
-        max_level,
         stats={
             "n_rings": len(rings),
             "n_intervals": n_iv,
@@ -240,7 +240,7 @@ def build_interval_index(
     return idx
 
 
-def _covers_distributed(rings_out: DataFrame, cover_level: int, max_level: int):
+def _covers_distributed(rings_out: DataFrame, cover_level: int):
     """Run cover_ring on the executors; returns collected
     (polygon_id, ring_index, lo, hi, full) tuples.  Delegates to the
     single cover kernel (crosswalk.covers_df) so the broadcast-index
@@ -250,7 +250,7 @@ def _covers_distributed(rings_out: DataFrame, cover_level: int, max_level: int):
     df = rings_out.repartition(
         max(rings_out.sparkSession.sparkContext.defaultParallelism, 8)
     )
-    return [tuple(r) for r in covers_df(df, cover_level, max_level).collect()]
+    return [tuple(r) for r in covers_df(df, cover_level).collect()]
 
 
 def broadcast_index(spark: SparkSession, index: IntervalIndex):
@@ -347,23 +347,16 @@ def pip_join_relational(
     points: DataFrame,
     rings_out: DataFrame,
     cover_level: int = 10,
-    bucket_level: int = 6,
-    max_level: int = MAX_LEVEL,
     id_col: str = "image_id",
     lon_col: str = "lon",
     lat_col: str = "lat",
 ) -> DataFrame:
     """PIP join for ring layers too large to broadcast as an
-    IntervalIndex — the same cell-bucket equi-join shape as
-    ``crosswalk_relational``:
-
-      points: cell at max level (JVM Morton expr) → coarse bucket (its
-          unique Morton prefix);
-      covers: distributed FULL/PARTIAL intervals (covers_df, never
-          collected) exploded to the bucket range they span;
-      join:   equi on bucket + ``lo <= cell <= hi`` residual.  A ring's
-          merged intervals are disjoint, so a point matches ≤ 1
-          interval per ring — no dedup needed, no cartesian.
+    IntervalIndex — ``crosswalk.interval_join`` of each point's
+    max-level cell, the range [cell, cell], against the distributed
+    FULL/PARTIAL cover ranges (covers_df, never collected).  A ring's
+    merged intervals are disjoint, so a point matches ≤ 1 interval per
+    ring — no dedup needed, no cartesian.
       FULL intervals accept outright (Raster-Intervals shortcut);
       PARTIAL candidates join the ring geometry by (polygon_id,
           ring_index) — only candidate rows ever carry coordinates —
@@ -371,14 +364,12 @@ def pip_join_relational(
           ring inside each Arrow batch.
 
     Output contract identical to ``pip_join``."""
-    import pandas as pd
-
     from pyspark.sql import functions as F
 
     from ..functions.cells_sql import cell_sql_expr
-    from .crosswalk import bucketed_cover_spans, covers_df
+    from ..geom import ring_mats
+    from .crosswalk import BUCKET_LEVEL, covers_df, interval_join
 
-    shift_b = 2 * (max_level - bucket_level)
     # same invalid-coordinate rejection as pip_join's kernel: the cell
     # expression clips, so out-of-window/NaN points would otherwise be
     # FULL-cell-accepted on boundary cells (pushed-down filter — prunes
@@ -392,17 +383,14 @@ def pip_join_relational(
         id_col,
         lon_col,
         lat_col,
-        F.expr(cell_sql_expr(lon_col, lat_col, max_level)).alias("cell"),
-    ).withColumn("bucket", F.shiftright(F.col("cell"), shift_b))
-    cov = bucketed_cover_spans(
-        covers_df(rings_out, cover_level, max_level), bucket_level, max_level
-    ).select("bucket", "lo", "hi", "full", "polygon_id", "ring_index")
-    cand = pts.join(
-        cov,
-        (pts.bucket == cov.bucket)
-        & (pts.cell >= cov.lo)
-        & (pts.cell <= cov.hi),
-    ).select(id_col, lon_col, lat_col, "full", "polygon_id", "ring_index")
+        F.expr(cell_sql_expr(lon_col, lat_col, MAX_LEVEL)).alias("a_lo"),
+    ).withColumn("a_hi", F.col("a_lo"))
+    cov = covers_df(rings_out, cover_level).select(
+        F.col("lo").alias("b_lo"), F.col("hi").alias("b_hi"), "full", "polygon_id", "ring_index"
+    )
+    cand = interval_join(pts, cov, BUCKET_LEVEL).select(
+        id_col, lon_col, lat_col, "full", "polygon_id", "ring_index"
+    )
 
     # attach ring geometry to PARTIAL candidates only, in the SAME plan
     # branch (a split into accepted/partial DataFrames would compute the
@@ -413,49 +401,51 @@ def pip_join_relational(
         F.col("ring_index").alias("r_ridx"),
         "coords",
     )
+    # output columns are ALWAYS named lon/lat, matching pip_join's
+    # hardcoded output schema — the two paths are drop-in replacements
+    # for each other, so custom lon_col/lat_col input names must not
+    # leak into the output contract
     withco = cand.join(
         rg,
         (cand.polygon_id == rg.r_pid)
         & (cand.ring_index == rg.r_ridx)
         & (cand.full == 0),
         "left",
-    ).select(id_col, lon_col, lat_col, "full", "polygon_id", "ring_index", "coords")
-
-    # output columns are ALWAYS named lon/lat, matching pip_join's
-    # hardcoded output schema — the two paths are drop-in replacements
-    # for each other, so custom lon_col/lat_col input names must not
-    # leak into the output contract
+    ).select(
+        F.col(id_col).cast("string").alias(id_col),
+        F.col(lon_col).cast("double").alias("lon"),
+        F.col(lat_col).cast("double").alias("lat"),
+        "full",
+        "polygon_id",
+        "ring_index",
+        "coords",
+    )
+    cols = [id_col, "lon", "lat", "polygon_id", "ring_index"]
     out_schema = (
         f"{id_col} string, lon double, lat double, "
         "polygon_id string, ring_index int"
     )
 
     def refine(batches):
-        cols = [id_col, lon_col, lat_col, "polygon_id", "ring_index"]
-        renames = {lon_col: "lon", lat_col: "lat"}
-        for pdf in batches:
-            keep_parts = []
-            fullm = pdf["full"] == 1
-            if fullm.any():
-                keep_parts.append(pdf.loc[fullm, cols])
-            part = pdf.loc[~fullm]
-            for (_pid, _ridx), grp in part.groupby(
-                ["polygon_id", "ring_index"], sort=False
-            ):
-                ring = np.asarray(
-                    [list(c) for c in grp["coords"].iloc[0]], dtype=np.float64
-                )
-                inside = point_in_ring_batch(
-                    grp[lon_col].to_numpy(np.float64),
-                    grp[lat_col].to_numpy(np.float64),
-                    ring,
-                )
-                if inside.any():
-                    keep_parts.append(grp.loc[inside, cols])
-            if keep_parts:
-                out = pd.concat(keep_parts, ignore_index=True)
-                out = out.rename(columns=renames)
-                out["ring_index"] = out["ring_index"].astype("int32")
-                yield out
+        for batch in batches:
+            keep = batch.column("full").to_numpy(zero_copy_only=False) == 1
+            part = np.flatnonzero(~keep)
+            if len(part):
+                sub = batch.take(pa.array(part))
+                pts, starts = ring_mats(sub.column("coords"))
+                lon = sub.column("lon").to_numpy(zero_copy_only=False)
+                lat = sub.column("lat").to_numpy(zero_copy_only=False)
+                # group the candidates per ring: one ray-cast call each
+                pid = sub.column("polygon_id").to_numpy(zero_copy_only=False)
+                ridx = sub.column("ring_index").to_numpy(zero_copy_only=False)
+                keys = [("polygon_id", "ascending"), ("ring_index", "ascending")]
+                order = np.asarray(pc.sort_indices(sub, sort_keys=keys), np.int64)
+                p, r = pid[order], ridx[order]
+                cut = np.flatnonzero((p[1:] != p[:-1]) | (r[1:] != r[:-1])) + 1
+                for rows in np.split(order, cut):
+                    ring = pts[starts[rows[0]] : starts[rows[0] + 1]]
+                    keep[part[rows]] = point_in_ring_batch(lon[rows], lat[rows], ring)
+            if keep.any():
+                yield batch.filter(pa.array(keep)).select(cols)
 
-    return withco.mapInPandas(refine, out_schema)
+    return withco.mapInArrow(refine, out_schema)

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 
 from simplepolygon_spark.cells import cell_range_at_max, cover_ring
 from simplepolygon_spark.operators.crosswalk import _bbox_cells, crosswalk
@@ -158,10 +159,13 @@ def test_crosswalk_matches_bruteforce(spark):
     assert got == expected
 
 
-def test_crosswalk_relational_fallback_equals_broadcast(spark):
+@pytest.mark.parametrize("level", [4, 5, 10])
+def test_crosswalk_relational_fallback_equals_broadcast(spark, level):
     """The cell-bucket equi-join path (no broadcast index) must produce
     exactly the broadcast crosswalk's rows, and its plan must be an
-    equi-join on the bucket key (no cartesian)."""
+    equi-join on the bucket key (no cartesian) — also for tile levels
+    coarser than the bucket level, where each tile cell spans several
+    buckets."""
     from simplepolygon_spark.operators.crosswalk import crosswalk_relational
     from simplepolygon_spark.sources.images import images_df
 
@@ -170,10 +174,8 @@ def test_crosswalk_relational_fallback_equals_broadcast(spark):
     bc = broadcast_index(spark, idx)
     imgs = images_df(spark, 300, partitions=4, with_bytes=False)
 
-    a = crosswalk(imgs, bc, level=10)
-    b = crosswalk_relational(
-        imgs, rings, level=10, cover_level=8, bucket_level=6
-    )
+    a = crosswalk(imgs, bc, level=level)
+    b = crosswalk_relational(imgs, rings, level=level, cover_level=8)
     rows_a = {(r.image_id, r.cell_id, r.polygon_id, r.ring_index) for r in a.collect()}
     rows_b = {(r.image_id, r.cell_id, r.polygon_id, r.ring_index) for r in b.collect()}
     assert rows_a == rows_b

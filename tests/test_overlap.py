@@ -119,6 +119,30 @@ def test_rings_overlap_kernel_matches_reference():
             assert rings_overlap(A, B) == _ref_overlap(A, B), (ka, kb)
 
 
+def test_ring_mats_offsets_and_rejections():
+    """The one Arrow ring reader: offsets follow the row lengths, and a
+    NULL ring, a NULL vertex and a 3-coordinate vertex each raise."""
+    import pyarrow as pa
+
+    from simplepolygon_spark.geom import ring_mats
+
+    t = pa.list_(pa.list_(pa.float64()))
+    rows = [[[0.0, 0.0], [1.0, 0.0], [0.0, 0.0]], [], [[2.0, 3.0]]]
+    pts, starts = ring_mats(pa.array(rows, t))
+    assert starts.tolist() == [0, 3, 3, 4]
+    assert pts.tolist() == [v for r in rows for v in r]
+    # a sliced column keeps its own offsets
+    pts, starts = ring_mats(pa.array(rows, t).slice(2))
+    assert starts.tolist() == [0, 1] and pts.tolist() == [[2.0, 3.0]]
+    for bad in (
+        [rows[0], None],
+        [[[0.0, 0.0], None, [1.0, 1.0]]],
+        [[[0.0, 0.0, 5.0], [1.0, 1.0]]],
+    ):
+        with pytest.raises(ValueError):
+            ring_mats(pa.array(bad, t))
+
+
 def _rings_df(spark, layer):
     rows = [
         (pid, ridx, [[float(x), float(y)] for x, y in coords])
@@ -228,11 +252,8 @@ def test_bucket_level_derivation_bounds_candidate_blowup(spark):
     by construction (any overlapping range pair shares its common
     cell's bucket at every level)."""
     from simplepolygon_spark.cells import MAX_LEVEL
-    from simplepolygon_spark.operators.crosswalk import covers_df
-    from simplepolygon_spark.operators.overlap import (
-        _melt_buckets,
-        derive_bucket_level,
-    )
+    from simplepolygon_spark.operators.crosswalk import bucket_melt, covers_df
+    from simplepolygon_spark.operators.overlap import _sided, derive_bucket_level
 
     # the 96199b0 shape at test scale: a dense unit grid vs a
     # half-cell-shifted copy (every ring overlaps ~4 of the other side)
@@ -248,18 +269,16 @@ def test_bucket_level_derivation_bounds_candidate_blowup(spark):
         for j in range(n)
     }
     dfa, dfb = _rings_df(spark, A), _rings_df(spark, B)
-    cov_a = covers_df(dfa, 10, MAX_LEVEL).persist()
-    cov_b = covers_df(dfb, 10, MAX_LEVEL).persist()
+    cov_a = covers_df(dfa, 10).persist()
+    cov_b = covers_df(dfb, 10).persist()
     try:
         derived = derive_bucket_level(cov_a, cov_b)
         assert 6 < derived <= MAX_LEVEL
 
         def intermediate(level):
-            return (
-                _melt_buckets(cov_a, "a", level)
-                .join(_melt_buckets(cov_b, "b", level), "bucket")
-                .count()
-            )
+            ma = bucket_melt(_sided(cov_a, "a"), "a", level)
+            mb = bucket_melt(_sided(cov_b, "b"), "b", level)
+            return ma.join(mb, ma.a_bucket == mb.b_bucket).count()
 
         n_true = (2 * n - 1) ** 2  # strict bbox-overlap pairs of the grids
         at_derived = intermediate(derived)
@@ -283,3 +302,20 @@ def test_bucket_level_derivation_bounds_candidate_blowup(spark):
     }
     assert auto == pinned
     assert len(auto) == (2 * n - 1) ** 2
+
+
+def test_overlap_join_releases_covers_on_failure(spark):
+    """A failing cover pass (NULL coords) must not leave the persisted
+    covers behind: the persist -> unpersist span is try/finally."""
+    A = _rings_df(spark, LAYER_A).unionByName(
+        spark.createDataFrame(
+            [("null", 0, None)],
+            "polygon_id string, ring_index int, coords array<array<double>>",
+        )
+    )
+    B = _rings_df(spark, LAYER_B)
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    with pytest.raises(Exception, match="NULL ring"):
+        overlap_join(A, B)
+    assert jsc.getPersistentRDDs().size() == before

@@ -106,7 +106,7 @@ def test_pip_join_relational_equals_broadcast(spark):
         (r.image_id, r.polygon_id, r.ring_index)
         for r in pip_join(pts, bc).collect()
     }
-    rel = pip_join_relational(pts, rings, cover_level=9, bucket_level=6)
+    rel = pip_join_relational(pts, rings, cover_level=9)
     b = {(r.image_id, r.polygon_id, r.ring_index) for r in rel.collect()}
     assert a == b
     assert len(a) > 0
