@@ -23,7 +23,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..cells import MAX_LEVEL, cell_range_at_max, cover_ring, spread_bits
+from ..cells import MAX_LEVEL, RingError, cell_range_at_max, cover_rings, spread_bits
 from ..geom import ring_mats
 
 
@@ -199,28 +199,29 @@ def interval_join(
 def covers_df(rings_out: DataFrame, cover_level: int = 8) -> DataFrame:
     """(polygon_id, ring_index, lo, hi, full) — the ring cover as a
     DataFrame, computed on the executors and NEVER collected: one
-    ``cells.cover_ring`` call per ring, the ring read straight from the
-    Arrow coords buffers (``geom.ring_mats``)."""
+    ``cells.cover_rings`` call per Arrow batch, the rings read straight
+    from the Arrow coords buffers (``geom.ring_mats``).  A ring with no
+    vertex or a non-finite coordinate fails the job with a
+    ``ValueError`` naming its polygon_id and ring_index."""
 
     def run(batches):
         for batch in batches:
             pts, starts = ring_mats(batch.column("coords"))
-            covs = [
-                cover_ring(pts[starts[i] : starts[i + 1]], max_level=cover_level)
-                for i in range(batch.num_rows)
-            ]
-            n = [len(c) for c in covs]
-            if not sum(n):
+            try:
+                row, lo, hi, full = cover_rings(pts, starts, cover_level)
+            except RingError as e:
+                pid, ridx = (batch.column(c)[e.row].as_py() for c in ("polygon_id", "ring_index"))
+                raise e.naming(pid, ridx) from None
+            if not len(row):
                 continue
-            iv = np.concatenate(covs)
-            row = pa.array(np.repeat(np.arange(batch.num_rows), n))
+            row = pa.array(row)
             yield pa.RecordBatch.from_arrays(
                 [
                     batch.column("polygon_id").take(row),
                     batch.column("ring_index").take(row).cast(pa.int32()),
-                    pa.array(iv[:, 0]),
-                    pa.array(iv[:, 1]),
-                    pa.array(iv[:, 2].astype(np.int32)),
+                    pa.array(lo),
+                    pa.array(hi),
+                    pa.array(full.astype(np.int32)),
                 ],
                 names=["polygon_id", "ring_index", "lo", "hi", "full"],
             )

@@ -48,7 +48,7 @@ def derive_bucket_level(cov_a: DataFrame, cov_b: DataFrame) -> int:
 
     The exact ``percentile`` map holds one entry per distinct span: the
     number of distinct merged-run lengths in the two covers (spans are
-    not powers of 4 — ``cover_ring`` merges adjacent same-flag cells)."""
+    not powers of 4 — ``cover_rings`` merges adjacent same-flag cells)."""
     row = (
         cov_a.select((F.col("hi") - F.col("lo") + F.lit(1)).alias("span"))
         .unionAll(

@@ -4,8 +4,10 @@ The scale architecture (SURVEY.md §2.3 J5, §3.4; Raster-Intervals idea
 from PAPERS.md):
 
 1. ``build_interval_index`` — the *dimension* side.  Decomposed simple
-   rings (rings_out) are covered with FULL/PARTIAL quadkey cells
-   (cells.cover_ring), compressed into sorted Morton [lo, hi] ranges,
+   rings (rings_out) are covered with FULL/PARTIAL quadkey cells (one
+   ``cells.cover_rings`` kernel call per Arrow batch of rings, on the
+   executors for a DataFrame and once over all rings for a list),
+   compressed into sorted Morton [lo, hi] ranges,
    flattened into an elementary-segment stabbing structure (CSR), and
    **broadcast** to every executor.  Size: O(cells of all rings) — the
    polygon layer is small next to the 10^12-row image table by design.
@@ -36,8 +38,8 @@ import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..cells import MAX_LEVEL, cell_of_point, cover_ring
-from ..geom import point_in_ring_batch
+from ..cells import MAX_LEVEL, RingError, cell_of_point, cover_rings
+from ..geom import point_in_ring_batch, ring_mats
 
 
 @dataclass
@@ -141,7 +143,6 @@ def build_interval_index(
     semantics of "the cleaned polygon interior": callers filter upstream
     if they want a different layer (we index whatever is passed in).
     """
-    cover_rows = None
     if isinstance(rings_out, DataFrame):
         # TWO actions read the ring layer (the distributed cover pass
         # and the coordinate collect) — persist for their duration so an
@@ -154,40 +155,41 @@ def build_interval_index(
         try:
             # compute covers on the executors (one Arrow pass over the
             # ring layer) — the driver only collects compressed intervals
-            cover_rows = _covers_distributed(rings_out, cover_level)
-            rows = rings_out.select("polygon_id", "ring_index", "coords").collect()
+            covers = _covers_distributed(rings_out, cover_level)
+            tbl = rings_out.select("polygon_id", "ring_index", "coords").toArrow()
         finally:
             if not caller_cached:
                 rings_out.unpersist()
+        pts, starts = ring_mats(tbl.column("coords").combine_chunks())
+        rings = [pts[starts[i] : starts[i + 1]] for i in range(tbl.num_rows)]
+        ring_keys = list(
+            zip(tbl.column("polygon_id").to_pylist(), tbl.column("ring_index").to_pylist())
+        )
+        # ring id = row of the collected layer: one hash lookup of every
+        # cover's (polygon_id, ring_index) in the layer's keys
+        rid = pc.index_in(_ring_key(covers), value_set=_ring_key(tbl))
+        rid = rid.to_numpy().astype(np.int64)
+        lo, hi, full = (covers.column(c).to_numpy() for c in ("lo", "hi", "full"))
+        order = np.lexsort((lo, rid))
+        rid, lo, hi, full = rid[order], lo[order], hi[order], full[order]
     else:
-        rows = rings_out
-
-    ring_keys, rings = [], []
-    ivs = []  # (lo, hi, ring_id, full)
-    rid_of = {}
-    for row in rows:
-        pid = row["polygon_id"]
-        ridx = int(row["ring_index"])
-        coords = np.asarray(row["coords"], dtype=np.float64)
-        rid_of[(pid, ridx)] = len(rings)
-        ring_keys.append((pid, ridx))
-        rings.append(coords)
-    if cover_rows is None:
-        for (pid, ridx), coords in zip(ring_keys, rings):
-            cov = cover_ring(coords, max_level=cover_level)
-            rid = rid_of[(pid, ridx)]
-            for lo, hi, fl in cov:
-                ivs.append((int(lo), int(hi), rid, int(fl)))
-    else:
-        for pid, ridx, lo, hi, fl in cover_rows:
-            ivs.append((int(lo), int(hi), rid_of[(pid, int(ridx))], int(fl)))
+        rows = list(rings_out)
+        ring_keys = [(row["polygon_id"], int(row["ring_index"])) for row in rows]
+        rings = [_ring_array(row["coords"]) for row in rows]
+        starts = np.zeros(len(rings) + 1, dtype=np.int64)
+        np.cumsum([len(r) for r in rings], out=starts[1:])
+        pts = np.concatenate(rings) if rings else np.zeros((0, 2))
+        try:
+            rid, lo, hi, full = cover_rings(pts, starts, cover_level)
+        except RingError as e:
+            raise e.naming(*ring_keys[e.row]) from None
 
     centroids = (
         np.array([r[:-1].mean(axis=0) for r in rings])
         if rings
         else np.zeros((0, 2))
     )
-    if not ivs:
+    if not len(lo):
         return IntervalIndex(
             ring_keys,
             rings,
@@ -199,12 +201,10 @@ def build_interval_index(
             centroids=centroids,
         )
 
-    iv = np.array(ivs, dtype=np.int64)
-    lo, hi = iv[:, 0], iv[:, 1]
     # elementary segments between all endpoints; sweep with +1/-1 events
     events = np.concatenate([lo, hi + 1])
     bp = np.unique(events)
-    n_iv = len(iv)
+    n_iv = len(lo)
     # For each elementary segment [bp[k], bp[k+1]-1] find active intervals.
     # CSR built by bucketing each interval onto the segments it spans.
     seg_of_lo = np.searchsorted(bp, lo, side="right") - 1
@@ -226,12 +226,12 @@ def build_interval_index(
         bp,
         seg_ptr,
         ids_sorted,
-        iv[:, 2].copy(),
-        iv[:, 3].astype(bool),
+        rid,
+        full.astype(bool),
         stats={
             "n_rings": len(rings),
             "n_intervals": n_iv,
-            "n_full": int(iv[:, 3].sum()),
+            "n_full": int(full.sum()),
             "n_segments": len(bp),
             "csr_entries": tot,
         },
@@ -240,17 +240,28 @@ def build_interval_index(
     return idx
 
 
-def _covers_distributed(rings_out: DataFrame, cover_level: int):
-    """Run cover_ring on the executors; returns collected
-    (polygon_id, ring_index, lo, hi, full) tuples.  Delegates to the
-    single cover kernel (crosswalk.covers_df) so the broadcast-index
-    build and the relational fallbacks can never drift apart."""
+def _ring_key(t: pa.Table) -> pa.Array:
+    """One string per row: polygon_id and ring_index, unit-separated."""
+    ridx = pc.cast(t.column("ring_index"), pa.string())
+    return pc.binary_join_element_wise(t.column("polygon_id"), ridx, "\x1f").combine_chunks()
+
+
+def _ring_array(coords) -> np.ndarray:
+    r = np.asarray(coords, dtype=np.float64)
+    return r.reshape(0, 2) if r.size == 0 else r
+
+
+def _covers_distributed(rings_out: DataFrame, cover_level: int) -> pa.Table:
+    """The (polygon_id, ring_index, lo, hi, full) covers of the ring
+    layer, computed on the executors by the single cover kernel
+    (crosswalk.covers_df, so the broadcast-index build and the
+    relational fallbacks can never drift apart), collected as Arrow."""
     from .crosswalk import covers_df
 
     df = rings_out.repartition(
         max(rings_out.sparkSession.sparkContext.defaultParallelism, 8)
     )
-    return [tuple(r) for r in covers_df(df, cover_level).collect()]
+    return covers_df(df, cover_level).toArrow()
 
 
 def broadcast_index(spark: SparkSession, index: IntervalIndex):
